@@ -1,17 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // codegen-class cache, tmpfs scratch, buffered shuffle-merge copy:
-    // the three measured session-infrastructure floors — evidence and
-    // production settings in graft.util.SessionTuning's scaladoc
-    val spark = graft.util.SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = GraftSession.local()
     // ERROR, not WARN: benchmark queries legitimately emit WARN spam
     // (WindowExec on provably-tiny unpartitioned windows, hundreds of
     // lines) and the driver parses a ~2000-char stdout TAIL — one

@@ -919,17 +919,6 @@ object ScaleCheck {
   private def runExponent(spark: SparkSession, sfDir: String): Unit = {
     val listener = new graft.streaming.TaskMetricsListener
     spark.sparkContext.addSparkListener(listener)
-    // listener delivery is async: poll until the sample stream goes
-    // quiet so a run's summary doesn't truncate its tail tasks
-    def settledSummary(): graft.streaming.ResourceSummary = {
-      var n = -1L; var same = 0; val deadline = System.currentTimeMillis + 10000
-      while (same < 3 && System.currentTimeMillis < deadline) {
-        val c = listener.samples.size.toLong
-        if (c == n) same += 1 else { same = 0; n = c }
-        Thread.sleep(50)
-      }
-      listener.summary
-    }
     val scales = Seq(20, 100)
     // SCALE-PAIRED measurement (r9): both replica sets are resident and
     // each probe measures its two scales BACK-TO-BACK, so a ratio
@@ -994,7 +983,7 @@ object ScaleCheck {
           }
         dropProbeStorage()
         val wall = (System.nanoTime() - t0) / 1e9
-        (wall, settledSummary(), ok)
+        (wall, listener.settledSummary(), ok)
       }
       // a failed run's truncated wall time must not enter the min or
       // the ratio table (advisory r9): NaN here, a dash in the summary
@@ -1038,15 +1027,9 @@ object ScaleCheck {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val docCopies = args.lift(0).flatMap(_.toIntOption).getOrElse(20)
     val embCopies = args.lift(1).flatMap(_.toIntOption).getOrElse(10)
-    val spark = graft.util.SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     if (args.headOption.contains("exp")) {
       runExponent(spark, sfDir)

@@ -125,18 +125,10 @@ object SparkEntry {
           lit("&ref=sidebar&gclid=1&q2=x"))).as("url"))
   }
 
-  /** Deterministic multi-line crawl pages: unique body text plus
-    * planted boilerplate lines — corpus-wide (rights notice),
-    * source-segment (subscribe prompt, docs ≡0 mod 3), at-the-df-floor
-    * (promo line, df=2 at the sf0.01 gate — must survive `maxDf=2`),
-    * and a short separator exempt from counting. Oracle twin: the
-    * `ldocs` CTE. */
   /** crawl_warc_gz's FIXTURE: per-doc gzip'd two-record WARC files
     * (even docs one member, odd member-per-record; every 7th
-    * trailer-truncated). Factored out so the bench can attribute the
-    * query's wall between fixture gzip CPU and the operator (r13
-    * verdict item 8) — see [[profileVariants]]. */
-  private[graft] def warcGzFiles(s: SparkSession, dir: String)
+    * trailer-truncated). */
+  private def warcGzFiles(s: SparkSession, dir: String)
       : org.apache.spark.sql.Dataset[graft.operators.Warc.WarcFileRow] = {
     val docs = t(s, dir, "documents")
     val h = pmod(col("doc_id"), lit(20L)).cast("string")
@@ -179,17 +171,12 @@ object SparkEntry {
       .product[graft.operators.Warc.WarcFileRow])
   }
 
-  /** Fixture-construction-only twins of fixture-dominated bench
-    * queries, so a bench mover self-attributes between fixture and
-    * operator cost (r13 verdict item 8). NOT part of the driver
-    * contract — [[graft.BenchProfile]] prints them alongside the
-    * parent query; never registered in [[queries]]/[[oracleSql]].
-    * (Lambda params deliberately NOT `(s, dir)` — ContractSpec's
-    * source scanner pins that exact pattern to the queries map.) */
-  private[graft] val profileVariants
-      : Map[String, (SparkSession, String) => DataFrame] = Map(
-    "crawl_warc_gz__fixture" -> ((sp, d) => warcGzFiles(sp, d).toDF()))
-
+  /** Deterministic multi-line crawl pages: unique body text plus
+    * planted boilerplate lines — corpus-wide (rights notice),
+    * source-segment (subscribe prompt, docs ≡0 mod 3), at-the-df-floor
+    * (promo line, df=2 at the sf0.01 gate — must survive `maxDf=2`),
+    * and a short separator exempt from counting. Oracle twin: the
+    * `ldocs` CTE. */
   private def synthMultiline(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), concat(
       coalesce(col("text"), lit("")),
@@ -1541,9 +1528,7 @@ object SparkEntry {
       // materialization. The parse downstream is byte-identical to
       // crawl_warc_records' plain path. NOTE (r13 verdict item 8):
       // this query's bench wall is dominated by the per-doc
-      // GZIPOutputStream FIXTURE below, not the operator — profile
-      // the split with `BenchProfile crawl_warc_gz` (prints the
-      // __fixture twin)
+      // GZIPOutputStream FIXTURE below, not the operator
       graft.operators.Warc.warcRecords(warcGzFiles(s, dir)).toDF()
         .select(col("id").as("doc_id"),
           col("rec_ord").cast("long").as("rec_ord"), col("ok"),

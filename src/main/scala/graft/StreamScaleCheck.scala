@@ -609,14 +609,8 @@ object StreamScaleCheck {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.util.SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.streaming.metricsEnabled", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
+    spark.conf.set("spark.sql.streaming.metricsEnabled", "true")
     val want: Set[String] =
       if (args.isEmpty) Set("neardup", "gapmon", "extract", "bpeserve",
         "curation", "urlseen", "linededup", "pacer")

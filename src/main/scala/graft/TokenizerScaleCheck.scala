@@ -78,13 +78,6 @@ object TokenizerScaleCheck {
     import spark.implicits._
     val listener = new graft.streaming.TaskMetricsListener
     spark.sparkContext.addSparkListener(listener)
-    def settled(): graft.streaming.ResourceSummary = {
-      var last = -1L
-      while (last != listener.samples.size.toLong) {
-        last = listener.samples.size.toLong; Thread.sleep(100)
-      }
-      listener.summary
-    }
     // a 1024-merge model trained on the same type space
     val model = TextOps.BpeModel(
       TextOps.bpeMergesInMemoryIndexed(zipfVocab(100000), 1024))
@@ -124,7 +117,7 @@ object TokenizerScaleCheck {
           .write.mode("overwrite").format("noop").save()
         (System.nanoTime() - t0) / 1e9
       }.min
-      val res = settled()
+      val res = listener.settledSummary()
       val tokens = nDocs * wordsPerDoc
       println(f"TOKSCALE serving docs=$nDocs%7d tokens=$tokens%10d " +
         f"types=$nTypes%8d wall=$t%7.2fs " +
@@ -137,13 +130,7 @@ object TokenizerScaleCheck {
     val mode = args.headOption.getOrElse("all")
     if (mode == "trainer" || mode == "all") trainerProbe()
     if (mode == "serving" || mode == "all") {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val spark = graft.util.SessionTuning.tuned(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false"))
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = GraftSession.local()
       servingProbe(spark)
       spark.stop()
     }

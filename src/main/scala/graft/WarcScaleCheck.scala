@@ -55,8 +55,7 @@ object WarcScaleCheck {
   def main(args: Array[String]): Unit = {
     val sizesMiB =
       if (args.nonEmpty) args.toSeq.map(_.toLong) else Seq(288L, 1152L, 4608L)
-    val spark = GraftSession.builder().getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val dir = java.nio.file.Files.createTempDirectory("warc-scale")
     try {
       for (mib <- sizesMiB) {

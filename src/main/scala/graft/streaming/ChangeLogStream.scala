@@ -85,11 +85,21 @@ final class ChangeLogBuffer {
     if (events.isEmpty) 0L else events.head.eventId - 1
   }
 
+  /** Index of the first event with an id above `id` (ids are monotone,
+    * so a binary search). */
+  private def firstAbove(id: Long): Int = {
+    var lo = 0; var hi = events.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (events(mid).eventId <= id) lo = mid + 1 else hi = mid
+    }
+    lo
+  }
+
   /** Half-open (min, max] slice, optionally filtered to table set. */
   def slice(range: OffsetRange, tables: Option[Set[String]]): Seq[ChangeEvent] =
     synchronized {
-      events.iterator
-        .filter(e => e.eventId > range.min && e.eventId <= range.max)
+      events.view.slice(firstAbove(range.min), firstAbove(range.max))
         .filter(e => tables.forall(_.contains(e.eventType)))
         .toVector
     }

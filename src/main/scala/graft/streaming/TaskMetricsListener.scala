@@ -75,6 +75,19 @@ class TaskMetricsListener extends SparkListener {
       s.map(_.gcTimeMs).sum)
   }
 
+  /** [[summary]] once the sample stream has gone quiet: listener
+    * delivery is async, so poll until the count holds for three 50 ms
+    * ticks (10 s deadline) and a run's summary keeps its tail tasks. */
+  def settledSummary(): ResourceSummary = {
+    var n = -1; var same = 0; val deadline = System.currentTimeMillis + 10000
+    while (same < 3 && System.currentTimeMillis < deadline) {
+      val c = synchronized(buf.size)
+      if (c == n) same += 1 else { same = 0; n = c }
+      Thread.sleep(50)
+    }
+    summary
+  }
+
   def toDF(spark: SparkSession): DataFrame = {
     import spark.implicits._
     samples.toDF()

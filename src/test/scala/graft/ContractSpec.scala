@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -22,6 +24,18 @@ class ContractSpec extends AnyFunSuite {
   private lazy val registered: Seq[String] =
     """"([a-z0-9_]+)" -> \(\(s, dir\)""".r
       .findAllMatchIn(source).map(_.group(1)).toSeq
+
+  test("GraftSession is the only place under src/main that builds a session") {
+    // one factory: a second builder site drifts from the shipped conf
+    // (time zone, extensions, the measured session floors)
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val sites = try files.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => java.nio.file.Files.readString(p).contains("SparkSession.builder()"))
+      .map(_.getFileName.toString).toSeq
+    finally files.close()
+    assert(sites == Seq("GraftSession.scala"), s"session builder sites: $sites")
+  }
 
   test("no query name is registered twice (shadowing) in the source") {
     val dups = registered.groupBy(identity).filter(_._2.size > 1).keys

@@ -6,14 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (one forked test JVM). */
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+    // the session conf that ships, plus the suite's own warehouse dir
+    val s = GraftSession.builder(4)
       .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -27,6 +27,13 @@ class ProfilerSpec extends SparkSpec {
   }
 
   test("GraftSession builder carries the recommended configs") {
+    // static confs (codegen cache, local dir, transferTo) do not show on
+    // the already-running shared context, so check the factory's conf
+    val conf = graft.GraftSession.settings(4)
+    assert(conf("spark.sql.codegen.cache.maxEntries") == "4096")
+    assert(conf("spark.file.transferTo") == "false")
+    assert(conf.get("spark.local.dir").exists(_.nonEmpty))
+    assert(conf("spark.sql.shuffle.partitions") == "4")
     val b = graft.GraftSession.builder(4)
     // the builder should produce a session config with our knobs; the
     // shared test session already exists, so inspect via a new session

@@ -36,6 +36,21 @@ class ChangeLogStreamSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("buffer slice returns exactly the (min, max] ids over a sparse log") {
+    val buf = new ChangeLogBuffer
+    val ids = (1L to 40L).map(_ * 10L) // 10, 20, ..., 400
+    def kind(i: Long) = if (i % 20 == 0) "click" else "view"
+    buf.append(ids.map(i => ev(i, kind(i))))
+    val bounds = Seq(-5L, 0L, 9L, 10L, 11L, 155L, 200L, 399L, 400L, 401L, 900L)
+    for (lo <- bounds; hi <- bounds if lo <= hi;
+         tables <- Seq(None, Some(Set("view")))) {
+      val got = buf.slice(graft.sources.ChangeLogSource.OffsetRange(lo, hi), tables)
+      val exp = ids.filter(i =>
+        i > lo && i <= hi && tables.forall(_.contains(kind(i))))
+      assert(got.map(_.eventId) == exp, s"slice ($lo, $hi] tables=$tables")
+    }
+  }
+
   test("restart from checkpoint resumes at committed offset (no loss/dup)") {
     val name = freshName()
     val buf = ChangeLogBuffers.get(name)

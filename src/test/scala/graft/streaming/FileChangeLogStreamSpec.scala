@@ -86,6 +86,24 @@ class FileChangeLogStreamSpec extends SparkSpec {
     assert(ids.length == ids.distinct.length)
   }
 
+  test("a null props value streams as null (the column is nullable)") {
+    val dir = tmp()
+    FileChangeLogStream.writeSegment(
+      (0 until 6).map(i => (i.toLong, new Timestamp(1700000000000L + i * 1000L),
+          i.toLong, "click", i + 0.5, if (i % 2 == 0) None else Some(s"p$i")))
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
+      dir)
+    val q = spark.readStream.format(FileChangeLogStream.FormatName)
+      .option("path", dir).load()
+      .writeStream.format("memory").queryName("fcl_null_props")
+      .option("checkpointLocation", tmp()).start()
+    try q.processAllAvailable() finally q.stop()
+    val got = spark.table("fcl_null_props").select("event_id", "props")
+      .as[(Long, Option[String])].collect().sortBy(_._1).toSeq
+    assert(got == (0 until 6).map(i =>
+      (i.toLong, if (i % 2 == 0) None else Some(s"p$i"))))
+  }
+
   test("admission control + table filter on the file source") {
     val dir = tmp()
     writeSegment(dir, 0 until 60, 1700000000000L)
