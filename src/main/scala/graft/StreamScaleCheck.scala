@@ -466,8 +466,9 @@ object StreamScaleCheck {
     * segments, streamed through the footer-stat offset ledger and the
     * pipe projection with `maxEventsPerTrigger = mult × 2000` — so
     * BOTH rates run the same ~50 micro-batches while each batch admits
-    * rate-proportional rows. Per-batch latency must be flat in batch
-    * index and ≲ linear in the admitted rows. */
+    * rate-proportional rows — each trigger split into 8 sub-range
+    * partitions. Per-batch latency must be flat in batch index and ≲
+    * linear in the admitted rows. */
   private def runExtract(spark: SparkSession, mult: Int,
                          segDir: String): Unit = {
     val q = ExtractionPipeline.pipeFormat(

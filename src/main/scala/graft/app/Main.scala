@@ -1,9 +1,13 @@
 package graft.app
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, max, min}
+
 import graft.model.EventGroups
 import graft.sources.ChangeLogSource
-import graft.streaming.{ChangeEvent, ChangeLogBuffers, ExtractionPipeline, FileChangeLogStream, StalenessListener}
-import graft.util.Cols
+import graft.sources.ChangeLogSource.{splitRange, OffsetRange}
+import graft.streaming.{ChangeLogStream, ExtractionPipeline, FileChangeLogStream, StalenessListener}
 
 /**
  * The reference `Client.main` (`Client.java:11-49`) re-expressed: same
@@ -16,10 +20,14 @@ import graft.util.Cols
  * | runDuration (min)   | graft.runMs        | awaitTermination timeout   |
  * | tables (group name) | graft.tables       | source IN-list pushdown    |
  *
- * A feeder thread replays the driver `events` table into the change
- * log at a steady rate (the TPC-C writer stand-in); the extraction
- * query tails it; the listener prints staleness/throughput at the end
- * (replacing the reference's three CSV writers).
+ * The change log is a directory of parquet segments read by
+ * [[FileChangeLogStream]]: `-Dgraft.sourceDir` names an existing one.
+ * Unset, a feeder thread (the TPC-C writer stand-in) lands the driver
+ * `events` table under `$graft.outDir-source` as 8 segments, one
+ * every `graft.triggerMs / 2`; nothing is collected into the driver.
+ * The extraction query tails the log; the listener prints
+ * staleness/throughput at the end (replacing the reference's three
+ * CSV writers).
  */
 object Main {
   def main(args: Array[String]): Unit = {
@@ -36,10 +44,8 @@ object Main {
       case "third" => EventGroups.Third
       case other => other.split(",").toSeq
     }
-
-    // -Dgraft.sourceDir=<dir of parquet segments> switches from the
-    // in-process buffer to the file-backed source (production shape).
-    val sourceDir = sys.props.get("graft.sourceDir")
+    val fed = !sys.props.contains("graft.sourceDir")
+    val sourceDir = sys.props.getOrElse("graft.sourceDir", s"$outDir-source")
 
     val spark = graft.GraftSession.builder(partitions)
       .appName("graft-extractor").getOrCreate()
@@ -50,63 +56,19 @@ object Main {
     val listener = new StalenessListener()
     spark.streams.addListener(listener)
 
-    // Feeder cap only binds in buffer mode (file mode streams the
-    // source dir; nothing is collected there).
-    val total = if (sourceDir.isDefined)
-      ChangeLogSource.table(spark, sfDir, "events").count()
-    else math.min(
-      ChangeLogSource.table(spark, sfDir, "events").count(),
-      sys.props.getOrElse("graft.feederMaxRows", "1000000").toLong)
+    val events = ChangeLogSource.table(spark, sfDir, "events")
+    val total = events.count()
+    if (fed) startFeeder(events, sourceDir, triggerMs / 2)
     // `stream` is the (possibly table-filtered) extraction input;
     // `monitorStream` is a second, UNFILTERED reader of the same log —
     // a filtered stream legitimately has event_id holes, so feeding it
     // to the gap monitor would report spurious gaps for any subgroup
     // run. Each streaming query checkpoints its own offsets, so two
     // readers over one log are independent.
-    val (stream, monitorStream) = sourceDir match {
-      case Some(d) =>
-        val r = spark.readStream.format(FileChangeLogStream.FormatName)
-          .option("path", d)
-        val filtered = (if (tables != EventGroups.All)
-          r.option("tables", tables.mkString(",")) else r).load()
-        val unfiltered = spark.readStream
-          .format(FileChangeLogStream.FormatName).option("path", d).load()
-        (filtered, unfiltered)
-      case None =>
-        // Feeder: replay the events table into the buffer in batches.
-        // Dev harness only — the collect() is bounded (first
-        // `graft.feederMaxRows` offsets, default 1M ≈ sf1) so pointing
-        // the demo at a huge table can't OOM the driver; production
-        // runs use -Dgraft.sourceDir (file-backed source, no collect).
-        val feederMax =
-          sys.props.getOrElse("graft.feederMaxRows", "1000000").toInt
-        // ts converts to epoch micros INSIDE the plan (Cols.epochUs is
-        // NTZ-safe); a Row.getTimestamp here would ClassCastException
-        // on TIMESTAMP_NTZ parquet, which surfaces as LocalDateTime
-        import org.apache.spark.sql.functions.col
-        val rows = ChangeLogSource.table(spark, sfDir, "events")
-          .select(col("event_id"), Cols.epochUs(col("ts")).as("ts_us"),
-            col("user_id"), col("event_type"), col("value"), col("props"))
-          .orderBy("event_id").limit(feederMax)
-          .collect()
-          .map(r => ChangeEvent(r.getLong(0), r.getLong(1),
-            r.getLong(2), r.getString(3), r.getDouble(4), r.getString(5)))
-          .sortBy(_.eventId)
-        val bufName = s"main-${System.nanoTime()}"
-        val buffer = ChangeLogBuffers.get(bufName)
-        val feeder = new Thread(() => {
-          rows.grouped(math.max(1, rows.length / 20)).foreach { chunk =>
-            buffer.append(chunk.toSeq)
-            Thread.sleep(triggerMs / 2)
-          }
-        }, "changelog-feeder")
-        feeder.setDaemon(true)
-        feeder.start()
-        (ExtractionPipeline.readChangeLog(spark, bufName, Some(tables),
-          numPartitions = partitions),
-         ExtractionPipeline.readChangeLog(spark, bufName, None,
-          numPartitions = partitions))
-    }
+    val stream = ExtractionPipeline.readChangeLog(spark, sourceDir,
+      Some(tables).filter(_ != EventGroups.All), partitions)
+    val monitorStream = ExtractionPipeline.readChangeLog(spark, sourceDir,
+      numPartitions = partitions)
     val query = ExtractionPipeline.start(stream, outDir,
       s"$outDir-checkpoint", triggerMs)
 
@@ -157,11 +119,34 @@ object Main {
 
     val extracted = spark.read.text(outDir).count()
     println(s"EXTRACTED rows=$extracted of=$total tables=$group" +
-      s" source=${sourceDir.fold("buffer")(_ => "files")}")
+      s" source=$sourceDir")
     listener.samples.takeRight(3).foreach(s => println(s"METRIC $s"))
     // S6: the staleness/throughput CSV the reference's sampler wrote
     graft.sinks.Sinks.writeMetricsCsv(listener, spark, s"$outDir-metrics")
     println(s"METRICS_CSV $outDir-metrics")
     spark.stop()
+  }
+
+  /** Land `events` into `dir` as 8 segments over its event_id span,
+    * `pauseMs` apart, on a daemon thread. A previous run's segments are
+    * removed first: a re-landed log must not overlap them. */
+  private def startFeeder(events: DataFrame, dir: String, pauseMs: Long): Unit = {
+    val spark = events.sparkSession
+    val path = new Path(dir)
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(path, true)
+    // cached once, so each landing is a small in-memory filter + write
+    val rows = events.select(ChangeLogStream.Schema.fieldNames.map(col).toSeq: _*)
+      .cache()
+    val span = rows.agg(min("event_id"), max("event_id")).head()
+    if (!span.isNullAt(0)) {
+      val feeder = new Thread(() =>
+        splitRange(OffsetRange(span.getLong(0) - 1, span.getLong(1)), 8).foreach { r =>
+          FileChangeLogStream.writeSegment(
+            rows.filter(col("event_id") > r.min && col("event_id") <= r.max), dir)
+          Thread.sleep(pauseMs)
+        }, "changelog-feeder")
+      feeder.setDaemon(true)
+      feeder.start()
+    }
   }
 }

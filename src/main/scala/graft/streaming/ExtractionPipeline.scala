@@ -22,14 +22,15 @@ import graft.util.Cols
  */
 object ExtractionPipeline {
 
-  /** Open the streaming change log (see [[ChangeLogStream]] options). */
-  def readChangeLog(spark: SparkSession, buffer: String,
+  /** Open the streaming change log over the parquet segments in `dir`
+    * (see [[FileChangeLogStream]] for the options). */
+  def readChangeLog(spark: SparkSession, dir: String,
                     tables: Option[Seq[String]] = None,
-                    numPartitions: Int = 4,
+                    numPartitions: Int = 1,
                     maxEventsPerTrigger: Long = Long.MaxValue,
                     startAt: String = "earliest"): DataFrame = {
-    val r = spark.readStream.format(ChangeLogStream.FormatName)
-      .option("buffer", buffer)
+    val r = spark.readStream.format(FileChangeLogStream.FormatName)
+      .option("path", dir)
       .option("numPartitions", numPartitions)
       .option("maxEventsPerTrigger", maxEventsPerTrigger)
       .option("startAt", startAt)

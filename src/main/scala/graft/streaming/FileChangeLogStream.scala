@@ -22,29 +22,40 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.sources.ChangeLogSource.{splitRange, OffsetRange}
+
 /**
- * File-backed micro-batch change-log source — the production shape of
- * [[ChangeLogStream]]: the audit log is a directory of parquet
- * segments (as landed by a CDC ingestion job), `event_id` is the
+ * DataSource V2 micro-batch change-log source — the Spark-native
+ * re-expression of the reference's coordinator/worker machinery
+ * (SURVEY.md §3.1). The audit log is a directory of immutable parquet
+ * segments (as landed by a CDC ingestion job); `event_id` is the
  * offset.
  *
- *  - Offset discovery reads only parquet FOOTER statistics (min/max of
- *    `event_id` per file) — the `max(event_id)` poll of the reference
- *    coordinator (`CoordinatorRunnable.java:84-86`) at metadata cost,
- *    no data scan. Footer spans are cached per file (segments are
- *    immutable once landed).
- *  - `planInputPartitions` assigns one partition per (file × offset
- *    range) whose id span intersects `(start, end]` — only new
- *    segments are ever read.
- *  - The reader pushes the offset range down as a parquet filter
- *    predicate (row-group pruning + record filter), mirroring the
- *    reference's `event_id > ? AND event_id <= ?` (`WorkerRunnable
- *    .java:93`), plus the `tables` IN-list.
+ *  - `latestOffset` IS the coordinator's poll `max(event_id)`
+ *    (reference `CoordinatorRunnable.java:84-86`) at metadata cost: it
+ *    reads only parquet FOOTER statistics (min/max of `event_id` per
+ *    file), cached per file. Admission control (`maxEventsPerTrigger`)
+ *    stands in for the bounded-queue back-pressure (`Client.java:17`).
+ *  - `planInputPartitions` carves the advance `(start, end]` into
+ *    `numPartitions` half-open ranges — the reference's `Task` objects
+ *    (`Task.java:2-16`; `numPartitions` ≙ `numberOfThread`) — and
+ *    intersects each with the segment spans: one partition per
+ *    (sub-range × segment), so only new segments are ever read.
+ *  - The reader pushes the range down as a parquet filter predicate
+ *    (row-group pruning + record filter), mirroring the reference's
+ *    `event_id > ? AND event_id <= ?` (`WorkerRunnable.java:93`), plus
+ *    the `tables` IN-list (`WorkerRunnable.java:94`).
+ *  - Offsets serialize into the streaming checkpoint: restart resumes
+ *    exactly where it stopped — the durability the reference lacks
+ *    (SURVEY §3.4 "no persistence of offsets").
  *
  * Usage: `spark.readStream.format(FileChangeLogStream.FormatName)
- * .option("path", dir).load()`. Schema = [[ChangeLogStream.Schema]];
- * `ts` may be stored as parquet TIMESTAMP in millis/micros/nanos (the
- * unit is read from the file's logical type).
+ * .option("path", dir).load()` (or [[ExtractionPipeline.readChangeLog]]).
+ * Options: `path`, `maxEventsPerTrigger`, `tables` (comma list),
+ * `startAt` (`earliest` | `latest`), `numPartitions` (default 1).
+ * Schema = [[ChangeLogStream.Schema]]; `ts` may be stored as parquet
+ * TIMESTAMP in millis/micros/nanos (the unit is read from the file's
+ * logical type).
  */
 object FileChangeLogStream {
   val FormatName: String = classOf[FileChangeLogTableProvider].getName
@@ -56,24 +67,28 @@ object FileChangeLogStream {
    * increasing `event_id` spans for offset discovery to be meaningful.
    */
   def writeSegment(df: org.apache.spark.sql.DataFrame, dir: String): Unit = {
-    df.sparkSession.conf
-      .set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    df.coalesce(1).write.mode("append").parquet(dir)
+    // the unit is this writer's business, not the caller's session's
+    val conf = df.sparkSession.conf
+    val key = "spark.sql.parquet.outputTimestampType"
+    val prev = conf.getAll.get(key)
+    conf.set(key, "TIMESTAMP_MICROS")
+    try df.coalesce(1).write.mode("append").parquet(dir)
+    finally prev.fold(conf.unset(key))(conf.set(key, _))
   }
 
-  /** (minId, maxId) span of one segment file, from footer stats only. */
-  private[streaming] def fileSpan(conf: Configuration, f: Path): (Long, Long) = {
+  /** (minId, maxId) span of one segment file, from footer stats only;
+    * None for a segment without rows (an empty landed batch). */
+  private[streaming] def fileSpan(conf: Configuration, f: Path): Option[(Long, Long)] = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
     try {
-      val blocks = reader.getFooter.getBlocks.asScala
-      val stats = blocks.flatMap { b =>
-        b.getColumns.asScala
-          .find(_.getPath.toDotString == "event_id")
-          .map(_.getStatistics)
-      }
-      val mins = stats.map(_.genericGetMin.asInstanceOf[java.lang.Long].longValue())
-      val maxs = stats.map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue())
-      (mins.min, maxs.max)
+      val stats = reader.getFooter.getBlocks.asScala.toSeq
+        .filter(_.getRowCount > 0)
+        .flatMap(_.getColumns.asScala.find(_.getPath.toDotString == "event_id"))
+        .map(_.getStatistics)
+      if (stats.isEmpty) None
+      else Some((
+        stats.map(_.genericGetMin.asInstanceOf[java.lang.Long].longValue()).min,
+        stats.map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue()).max))
     } finally reader.close()
   }
 
@@ -121,27 +136,33 @@ class FileChangeLogScanBuilder(options: CaseInsensitiveStringMap)
     options.getLong("maxEventsPerTrigger", Long.MaxValue)
   private val tables: Option[Set[String]] =
     Option(options.get("tables")).map(_.split(",").map(_.trim).toSet)
+  // "earliest" replays the whole log; "latest" skips history (the
+  // reference's behavior, `CoordinatorRunnable.java:35-42`)
   private val startAt = options.getOrDefault("startAt", "earliest")
-  private val maxIdsPerPartition: Long =
-    options.getLong("maxIdsPerPartition", Long.MaxValue)
+  require(startAt == "earliest" || startAt == "latest",
+    s"option 'startAt' must be 'earliest' or 'latest', got '$startAt'")
+  private val numPartitions = options.getInt("numPartitions", 1)
+  require(numPartitions > 0,
+    s"option 'numPartitions' must be positive, got $numPartitions")
 
   override def build(): Scan = this
   override def readSchema(): StructType = ChangeLogStream.Schema
   override def description(): String = s"graft_file_changelog(path=$dir)"
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new FileChangeLogMicroBatchStream(dir, maxEventsPerTrigger, tables,
-      startAt, maxIdsPerPartition)
+      startAt, numPartitions)
 }
 
 class FileChangeLogMicroBatchStream(dir: String, maxEventsPerTrigger: Long,
                                     tables: Option[Set[String]],
                                     startAt: String,
-                                    maxIdsPerPartition: Long = Long.MaxValue)
+                                    numPartitions: Int = 1)
     extends MicroBatchStream with SupportsAdmissionControl {
 
   private val conf = new Configuration()
   // immutable segments: cache each file's footer span after first read
-  private val spanCache = scala.collection.mutable.HashMap[String, (Long, Long)]()
+  private val spanCache =
+    scala.collection.mutable.HashMap[String, Option[(Long, Long)]]()
 
   private def listSegments(): Seq[FileStatus] = {
     val p = new Path(dir)
@@ -152,10 +173,9 @@ class FileChangeLogMicroBatchStream(dir: String, maxEventsPerTrigger: Long,
   }
 
   private def spans(): Seq[(Path, (Long, Long))] = synchronized {
-    listSegments().map { s =>
-      val key = s.getPath.toString
-      s.getPath -> spanCache.getOrElseUpdate(key,
-        FileChangeLogStream.fileSpan(conf, s.getPath))
+    listSegments().flatMap { s =>
+      spanCache.getOrElseUpdate(s.getPath.toString,
+        FileChangeLogStream.fileSpan(conf, s.getPath)).map(s.getPath -> _)
     }
   }
 
@@ -190,23 +210,21 @@ class FileChangeLogMicroBatchStream(dir: String, maxEventsPerTrigger: Long,
     val lo = start.asInstanceOf[ChangeLogOffset].maxId
     val hi = end.asInstanceOf[ChangeLogOffset].maxId
     if (hi <= lo) Array.empty
-    else spans()
-      .filter { case (_, (mn, mx)) => mx > lo && mn <= hi }
-      .flatMap { case (p, (mn, mx)) =>
-        // a single large segment (backfill, compaction output) must not
-        // cap parallelism at one task: split its intersected id span
-        // into sub-ranges of at most maxIdsPerPartition. Each sub-range
-        // re-opens the file but the offset predicate prunes row groups
-        // by statistics, so a sorted segment reads each row group once.
-        val fLo = math.max(lo, mn - 1)
-        val fHi = math.min(hi, mx)
-        val width = math.max(1L, maxIdsPerPartition)
-        (fLo until fHi by width).map { s =>
-          // saturating add: s + width overflows Long when unsplit
-          val e = if (width > fHi - s) fHi else s + width
-          FileChangeLogPartition(p.toString, s, e, tables): InputPartition
+    else {
+      val segments = spans().filter { case (_, (mn, mx)) => mx > lo && mn <= hi }
+      // a single large segment (backfill, compaction output) must not
+      // cap parallelism at one task: each of the numPartitions
+      // sub-ranges reads its share of every segment it overlaps. A
+      // sub-range re-opens the file, but the offset predicate prunes row
+      // groups by statistics, so a sorted segment reads each row group
+      // once. At numPartitions = 1: one partition per segment.
+      splitRange(OffsetRange(lo, hi), numPartitions).flatMap { r =>
+        segments.collect { case (p, (mn, mx)) if mx > r.min && mn <= r.max =>
+          FileChangeLogPartition(p.toString, math.max(r.min, mn - 1),
+            math.min(r.max, mx), tables): InputPartition
         }
       }.toArray
+    }
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

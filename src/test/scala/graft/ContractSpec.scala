@@ -37,6 +37,20 @@ class ContractSpec extends AnyFunSuite {
     assert(sites == Seq("GraftSession.scala"), s"session builder sites: $sites")
   }
 
+  test("one change-log source: a single TableProvider under src/main") {
+    // two sources for one log drift apart (options, offsets, the laws
+    // the specs prove); the file-backed source is the one
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val providers = try files.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(p => """class\s+(\w+)[^{]*?\b(?:extends|with)\s+TableProvider\b""".r
+        .findAllMatchIn(java.nio.file.Files.readString(p)).map(_.group(1)))
+      .toSeq
+    finally files.close()
+    assert(providers == Seq("FileChangeLogTableProvider"),
+      s"TableProvider implementations: $providers")
+  }
+
   test("no query name is registered twice (shadowing) in the source") {
     val dups = registered.groupBy(identity).filter(_._2.size > 1).keys
     assert(dups.isEmpty, s"shadowed query registrations: $dups")

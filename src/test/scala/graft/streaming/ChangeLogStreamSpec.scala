@@ -11,24 +11,30 @@ import graft.SparkSpec
 class ChangeLogStreamSpec extends SparkSpec {
   import spark.implicits._
 
-  private def ev(id: Long, t: String = "click", userId: Long = 1L): ChangeEvent =
-    ChangeEvent(id, 1700000000000000L + id * 1000000L, userId, t, 1.5, s"p$id")
+  private def ev(id: Long, t: String = "click", userId: Long = 1L): ChangeLogSegments.Row =
+    (id, 1700000000000000L + id * 1000000L, userId, t, 1.5, s"p$id")
 
   private def freshName(): String = s"t${System.nanoTime()}"
 
   private def tmp(): String =
     Files.createTempDirectory("graft-stream").toString
 
+  /** A fresh change-log dir holding `rows` as its first segment. */
+  private def logOf(rows: Seq[ChangeLogSegments.Row]): String = {
+    val dir = tmp()
+    ChangeLogSegments.land(spark, dir, rows)
+    dir
+  }
+
   test("micro-batch source streams appended events exactly once") {
     val name = freshName()
-    val buf = ChangeLogBuffers.get(name)
-    buf.append((1L to 50L).map(ev(_)))
-    val q = ExtractionPipeline.readChangeLog(spark, name, numPartitions = 3)
+    val log = logOf((1L to 50L).map(ev(_)))
+    val q = ExtractionPipeline.readChangeLog(spark, log, numPartitions = 3)
       .writeStream.format("memory").queryName(s"m$name")
       .option("checkpointLocation", tmp()).start()
     try {
       q.processAllAvailable()
-      buf.append((51L to 80L).map(ev(_)))
+      ChangeLogSegments.land(spark, log, (51L to 80L).map(ev(_)))
       q.processAllAvailable()
       val got = spark.table(s"m$name").select("event_id").as[Long].collect()
       assert(got.sorted.toSeq == (1L to 80L))
@@ -36,35 +42,18 @@ class ChangeLogStreamSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("buffer slice returns exactly the (min, max] ids over a sparse log") {
-    val buf = new ChangeLogBuffer
-    val ids = (1L to 40L).map(_ * 10L) // 10, 20, ..., 400
-    def kind(i: Long) = if (i % 20 == 0) "click" else "view"
-    buf.append(ids.map(i => ev(i, kind(i))))
-    val bounds = Seq(-5L, 0L, 9L, 10L, 11L, 155L, 200L, 399L, 400L, 401L, 900L)
-    for (lo <- bounds; hi <- bounds if lo <= hi;
-         tables <- Seq(None, Some(Set("view")))) {
-      val got = buf.slice(graft.sources.ChangeLogSource.OffsetRange(lo, hi), tables)
-      val exp = ids.filter(i =>
-        i > lo && i <= hi && tables.forall(_.contains(kind(i))))
-      assert(got.map(_.eventId) == exp, s"slice ($lo, $hi] tables=$tables")
-    }
-  }
-
   test("restart from checkpoint resumes at committed offset (no loss/dup)") {
-    val name = freshName()
-    val buf = ChangeLogBuffers.get(name)
+    val log = logOf((1L to 30L).map(ev(_)))
     val ckpt = tmp()
     val out = tmp()
-    buf.append((1L to 30L).map(ev(_)))
     def run(): Unit = {
-      val q = ExtractionPipeline.readChangeLog(spark, name)
+      val q = ExtractionPipeline.readChangeLog(spark, log)
         .writeStream.format("parquet").option("path", out)
         .option("checkpointLocation", ckpt).start()
       try q.processAllAvailable() finally q.stop()
     }
     run()
-    buf.append((31L to 60L).map(ev(_)))
+    ChangeLogSegments.land(spark, log, (31L to 60L).map(ev(_)))
     run() // second incarnation must pick up only 31..60
     val got = spark.read.parquet(out).select("event_id").as[Long].collect()
     assert(got.sorted.toSeq == (1L to 60L))
@@ -73,8 +62,8 @@ class ChangeLogStreamSpec extends SparkSpec {
 
   test("admission control caps events per micro-batch") {
     val name = freshName()
-    ChangeLogBuffers.get(name).append((1L to 100L).map(ev(_)))
-    val q = ExtractionPipeline.readChangeLog(spark, name,
+    val log = logOf((1L to 100L).map(ev(_)))
+    val q = ExtractionPipeline.readChangeLog(spark, log,
         maxEventsPerTrigger = 25L)
       .writeStream.format("memory").queryName(s"m$name")
       .option("checkpointLocation", tmp()).start()
@@ -89,9 +78,9 @@ class ChangeLogStreamSpec extends SparkSpec {
 
   test("tables option pushes the IN-list into the source") {
     val name = freshName()
-    ChangeLogBuffers.get(name).append(Seq(
+    val log = logOf(Seq(
       ev(1, "click"), ev(2, "purchase"), ev(3, "error"), ev(4, "view")))
-    val q = ExtractionPipeline.readChangeLog(spark, name,
+    val q = ExtractionPipeline.readChangeLog(spark, log,
         tables = Some(Seq("click", "view")))
       .writeStream.format("memory").queryName(s"m$name")
       .option("checkpointLocation", tmp()).start()
@@ -104,14 +93,13 @@ class ChangeLogStreamSpec extends SparkSpec {
 
   test("startAt=latest skips history like the reference coordinator") {
     val name = freshName()
-    val buf = ChangeLogBuffers.get(name)
-    buf.append((1L to 20L).map(ev(_)))
-    val q = ExtractionPipeline.readChangeLog(spark, name, startAt = "latest")
+    val log = logOf((1L to 20L).map(ev(_)))
+    val q = ExtractionPipeline.readChangeLog(spark, log, startAt = "latest")
       .writeStream.format("memory").queryName(s"m$name")
       .option("checkpointLocation", tmp()).start()
     try {
       q.processAllAvailable()
-      buf.append((21L to 25L).map(ev(_)))
+      ChangeLogSegments.land(spark, log, (21L to 25L).map(ev(_)))
       q.processAllAvailable()
       val got = spark.table(s"m$name").select("event_id").as[Long].collect()
       assert(got.sorted.toSeq == (21L to 25L))
@@ -119,10 +107,9 @@ class ChangeLogStreamSpec extends SparkSpec {
   }
 
   test("extraction pipeline writes enriched pipe lines end-to-end") {
-    val name = freshName()
-    ChangeLogBuffers.get(name).append(Seq(ev(1, "click", 7), ev(2, "view", 7)))
+    val log = logOf(Seq(ev(1, "click", 7), ev(2, "view", 7)))
     val out = tmp()
-    val stream = ExtractionPipeline.readChangeLog(spark, name)
+    val stream = ExtractionPipeline.readChangeLog(spark, log)
     val q = ExtractionPipeline.start(stream, out, tmp(), triggerMs = 100L)
     try q.processAllAvailable() finally q.stop()
     val lines = spark.read.text(out).select("value").as[String].collect().sorted
@@ -135,7 +122,7 @@ class ChangeLogStreamSpec extends SparkSpec {
   }
 
   test("dedupRedeliveries drops replayed offsets within the watermark") {
-    val input = MemoryStream[ChangeEvent](spark)
+    val input = MemoryStream[ChangeLogSegments.Row](spark)
     val deduped = ExtractionPipeline.dedupRedeliveries(
       input.toDS().toDF(
         "event_id", "tsMicros", "user_id", "event_type", "value", "props")
@@ -145,13 +132,13 @@ class ChangeLogStreamSpec extends SparkSpec {
     try {
       val t0 = 1700000000000000L
       input.addData(
-        ChangeEvent(1, t0, 1, "click", 1.0, "p"),
-        ChangeEvent(2, t0 + 1000000, 1, "view", 1.0, "p"),
-        ChangeEvent(1, t0, 1, "click", 1.0, "p")) // redelivery, same batch
+        (1L, t0, 1L, "click", 1.0, "p"),
+        (2L, t0 + 1000000, 1L, "view", 1.0, "p"),
+        (1L, t0, 1L, "click", 1.0, "p")) // redelivery, same batch
       q.processAllAvailable()
       // redelivery across batches, still inside the watermark window
-      input.addData(ChangeEvent(2, t0 + 1000000, 1, "view", 1.0, "p"),
-        ChangeEvent(3, t0 + 2000000, 1, "click", 1.0, "p"))
+      input.addData((2L, t0 + 1000000, 1L, "view", 1.0, "p"),
+        (3L, t0 + 2000000, 1L, "click", 1.0, "p"))
       q.processAllAvailable()
       val ids = spark.table("dedup_sink").select("event_id")
         .as[Long].collect()
@@ -162,12 +149,12 @@ class ChangeLogStreamSpec extends SparkSpec {
   test("stream-stream interval join correlates events within the window") {
     val name = freshName()
     val t0 = 1700000000000000L
-    ChangeLogBuffers.get(name).append(Seq(
-      ChangeEvent(1, t0, 7, "click", 1.0, "p"),
-      ChangeEvent(2, t0 + 600L * 1000000, 7, "purchase", 9.0, "p"),   // +10 min
-      ChangeEvent(3, t0 + 7200L * 1000000, 7, "purchase", 9.0, "p"),  // +2 h: outside
-      ChangeEvent(4, t0 + 300L * 1000000, 8, "purchase", 9.0, "p")))  // other user
-    val src = ExtractionPipeline.readChangeLog(spark, name)
+    val log = logOf(Seq(
+      (1L, t0, 7L, "click", 1.0, "p"),
+      (2L, t0 + 600L * 1000000, 7L, "purchase", 9.0, "p"),   // +10 min
+      (3L, t0 + 7200L * 1000000, 7L, "purchase", 9.0, "p"),  // +2 h: outside
+      (4L, t0 + 300L * 1000000, 8L, "purchase", 9.0, "p")))  // other user
+    val src = ExtractionPipeline.readChangeLog(spark, log)
     val joined = ExtractionPipeline.correlate(
       src.filter($"event_type" === "click"),
       src.filter($"event_type" === "purchase"))
@@ -184,13 +171,13 @@ class ChangeLogStreamSpec extends SparkSpec {
   test("streaming throughput query aggregates per-minute with watermark") {
     val name = freshName()
     val base = 1700000040000L // minute-aligned epoch millis
-    ChangeLogBuffers.get(name).append(Seq(
-      ChangeEvent(1L, base * 1000L, 1L, "click", 1.0, "p"),
-      ChangeEvent(2L, (base + 10000) * 1000L, 2L, "view", 1.0, "p"),
-      ChangeEvent(3L, (base + 70000) * 1000L, 1L, "click", 1.0, "p"),
-      ChangeEvent(4L, (base + 200000) * 1000L, 3L, "view", 1.0, "p")))
+    val log = logOf(Seq(
+      (1L, base * 1000L, 1L, "click", 1.0, "p"),
+      (2L, (base + 10000) * 1000L, 2L, "view", 1.0, "p"),
+      (3L, (base + 70000) * 1000L, 1L, "click", 1.0, "p"),
+      (4L, (base + 200000) * 1000L, 3L, "view", 1.0, "p")))
     val q = ExtractionPipeline
-      .throughputQuery(ExtractionPipeline.readChangeLog(spark, name))
+      .throughputQuery(ExtractionPipeline.readChangeLog(spark, log))
       .writeStream.format("memory").queryName(s"m$name")
       .outputMode("update").option("checkpointLocation", tmp()).start()
     try {

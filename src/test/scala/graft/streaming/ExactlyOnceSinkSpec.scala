@@ -22,23 +22,23 @@ import graft.SparkSpec
 class ExactlyOnceSinkSpec extends SparkSpec {
   import spark.implicits._
 
-  private def ev(id: Long): ChangeEvent =
-    ChangeEvent(id, 1700000000000000L + id * 1000000L, id % 7,
-      "click", id / 2.0, s"p$id")
+  private def ev(id: Long): ChangeLogSegments.Row =
+    (id, 1700000000000000L + id * 1000000L, id % 7, "click", id / 2.0, s"p$id")
 
   private def tmp(): String =
     Files.createTempDirectory("graft-eo").toString
 
   test("mid-batch kill + checkpoint restart: no duplicate, no missing line") {
-    val name = s"eo${System.nanoTime()}"
-    val buf = ChangeLogBuffers.get(name)
-    buf.append((1L to 200L).map(ev))
+    // four landed segments of 50 ids: the crashed batch (61, 120]
+    // spans a segment seam
+    val log = tmp()
+    (1L to 200L).grouped(50).foreach(ids => ChangeLogSegments.land(spark, log, ids.map(ev)))
     val outDir = tmp(); val ckpt = tmp()
     val crashArmed = new AtomicBoolean(true)
 
     def runQuery(): Unit = {
       val q = ExtractionPipeline
-        .readChangeLog(spark, name, numPartitions = 2,
+        .readChangeLog(spark, log, numPartitions = 2,
           maxEventsPerTrigger = 60L) // 200 events -> >= 4 batches
         .writeStream
         .trigger(Trigger.ProcessingTime(50L))

@@ -65,14 +65,13 @@ class StreamingSoakSpec extends SparkSpec {
     val n = 80 + rnd.nextInt(120)
     val met = 20 + rnd.nextInt(40)
     val crashBatch = rnd.nextInt(2).toLong
-    val name = s"soak-ex-$seed-${System.nanoTime()}"
-    ChangeLogBuffers.get(name).append((1L to n.toLong).map(id =>
-      ChangeEvent(id, 1700000000000000L + id * 1000000L, id % 7,
-        "click", id / 2.0, s"p$id")))
+    val log = tmp("soak-ex-log")
+    ChangeLogSegments.land(spark, log, (1L to n.toLong).map(id =>
+      (id, 1700000000000000L + id * 1000000L, id % 7, "click", id / 2.0, s"p$id")))
     val outDir = tmp("soak-ex-out"); val ckpt = tmp("soak-ex-ck")
     val crashArmed = new AtomicBoolean(true)
     def mk() = ExtractionPipeline
-      .readChangeLog(spark, name, numPartitions = 2,
+      .readChangeLog(spark, log, numPartitions = 2,
         maxEventsPerTrigger = met.toLong)
       .writeStream
       .trigger(Trigger.ProcessingTime(25L))
@@ -101,14 +100,14 @@ class StreamingSoakSpec extends SparkSpec {
     val crashBatch = rnd.nextInt(2).toLong
     val types = Array("a", "b", "c")
     val rows = (1L to n.toLong).map(id =>
-      ChangeEvent(id, 1700000000000000L + id * 60000000L,
+      (id, 1700000000000000L + id * 60000000L,
         rnd.nextInt(2).toLong, types(rnd.nextInt(3)), id.toDouble, s"p$id"))
-    val name = s"soak-tr-$seed-${System.nanoTime()}"
-    ChangeLogBuffers.get(name).append(rows)
+    val log = tmp("soak-tr-log")
+    ChangeLogSegments.land(spark, log, rows)
     val outDir = tmp("soak-tr-out"); val ckpt = tmp("soak-tr-ck")
     val crashArmed = new AtomicBoolean(true)
     def mk() = TransitionTracker.track(
-        ExtractionPipeline.readChangeLog(spark, name, numPartitions = 2,
+        ExtractionPipeline.readChangeLog(spark, log, numPartitions = 2,
             maxEventsPerTrigger = met.toLong)
           .select(col("user_id").as("userId"), col("ts"),
             col("event_id").as("eventId"),
@@ -136,8 +135,8 @@ class StreamingSoakSpec extends SparkSpec {
       .as[(String, String, Long)].collect()
       .map { case (f, t, c) => (f, t) -> c }.toMap
     val want = CdcOps.transitionMatrix(
-        rows.map(e => (e.eventId, e.userId,
-          new Timestamp(e.tsMicros / 1000L), e.eventType))
+        rows.map { case (id, tsUs, user, kind, _, _) =>
+          (id, user, new Timestamp(tsUs / 1000L), kind) }
           .toDF("event_id", "user_id", "ts", "event_type"))
       .as[(String, String, Long)].collect()
       .map { case (f, t, c) => (f, t) -> c }.toMap
@@ -155,18 +154,17 @@ class StreamingSoakSpec extends SparkSpec {
     // fill land in different micro-batches, so the expectation is
     // batch-boundary-independent: one gap, one late fill
     val offs = ((1L to n.toLong).filterNot(_ == hole) :+ hole)
-    val name = s"soak-gap-$seed-${System.nanoTime()}"
-    // the buffer's event_id must be monotone (source contract); the
+    // the log's event_id must be monotone (source contract); the
     // monitored OFFSET rides in `value`, so the late fill is just a
     // later event carrying a lower offset — the real CDC shape
-    ChangeLogBuffers.get(name).append(offs.zipWithIndex.map { case (o, i) =>
-      ChangeEvent(i + 1L, 1700000000000000L + i * 1000000L, 0L, "click",
-        o.toDouble, s"p$o")
+    val log = tmp("soak-gap-log")
+    ChangeLogSegments.land(spark, log, offs.zipWithIndex.map { case (o, i) =>
+      (i + 1L, 1700000000000000L + i * 1000000L, 0L, "click", o.toDouble, s"p$o")
     })
     val outDir = tmp("soak-gap-out"); val ckpt = tmp("soak-gap-ck")
     val crashArmed = new AtomicBoolean(true)
     def mk() = GapMonitor.monitor(
-        ExtractionPipeline.readChangeLog(spark, name, numPartitions = 1,
+        ExtractionPipeline.readChangeLog(spark, log, numPartitions = 1,
             maxEventsPerTrigger = met.toLong)
           .select(lit("t").as("source"),
             col("value").cast("long").as("offset"))

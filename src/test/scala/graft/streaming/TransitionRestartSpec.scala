@@ -26,24 +26,23 @@ class TransitionRestartSpec extends SparkSpec {
   import spark.implicits._
 
   test("mid-batch kill + restart: transition counts equal the batch operator") {
-    val name = s"tr${System.nanoTime()}"
-    val buf = ChangeLogBuffers.get(name)
     // two users, interleaved event types, ids 1..12 in ts order —
     // with maxEventsPerTrigger=4 the pairs (4,6), (8,10) etc. span
     // micro-batch boundaries through carried state
     val types = Array("a", "b", "c")
     val rows = (1L to 12L).map { id =>
-      ChangeEvent(id, 1700000000000000L + id * 60000000L, id % 2,
+      (id, 1700000000000000L + id * 60000000L, id % 2,
         types(((id - 1) / 2 % 3).toInt), id.toDouble, s"p$id")
     }
-    buf.append(rows)
+    val log = Files.createTempDirectory("graft-tr-log").toString
+    ChangeLogSegments.land(spark, log, rows)
     val outDir = Files.createTempDirectory("graft-tr-out").toString
     val ckpt = Files.createTempDirectory("graft-tr-ck").toString
     val crashArmed = new AtomicBoolean(true)
 
     def runQuery(): Unit = {
       val tracked = TransitionTracker.track(
-        ExtractionPipeline.readChangeLog(spark, name, numPartitions = 2,
+        ExtractionPipeline.readChangeLog(spark, log, numPartitions = 2,
             maxEventsPerTrigger = 4L) // 12 events -> >= 3 batches
           .select(col("user_id").as("userId"), col("ts"),
             col("event_id").as("eventId"),
@@ -89,8 +88,8 @@ class TransitionRestartSpec extends SparkSpec {
       .as[(String, String, Long)].collect()
       .map { case (f, t, n) => (f, t) -> n }.toMap
     val want = CdcOps.transitionMatrix(
-        rows.map(e => (e.eventId, e.userId,
-          new Timestamp(e.tsMicros / 1000L), e.eventType))
+        rows.map { case (id, tsUs, user, kind, _, _) =>
+          (id, user, new Timestamp(tsUs / 1000L), kind) }
           .toDF("event_id", "user_id", "ts", "event_type"))
       .as[(String, String, Long)].collect()
       .map { case (f, t, n) => (f, t) -> n }.toMap
