@@ -3,11 +3,13 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.sources.ChangeLogSource.{splitRange, OffsetRange}
 import graft.streaming.{ExtractionPipeline, FileChangeLogStream, GapMonitor, StreamingNearDup}
 
 /**
@@ -27,17 +29,33 @@ import graft.streaming.{ExtractionPipeline, FileChangeLogStream, GapMonitor, Str
  * Components: [[StreamingNearDup]] (LSH band ownership,
  * event-time-timeout state), [[GapMonitor]] (offset-gap tracking,
  * O(maxTracked) state per source), and the [[FileChangeLogStream]]
- * extraction (admission-controlled parquet micro-batches through the
- * pipe-format projection — the reference's whole job,
- * `CoordinatorRunnable.java:75-94`, at scaled rates).
+ * extraction (admission-controlled parquet micro-batches through
+ * [[ExtractionPipeline.start]]'s commit-ts enrichment and pipe chunks —
+ * the reference's whole job, `CoordinatorRunnable.java:75-94`, at
+ * scaled rates).
  *
- * Usage: `runMain graft.StreamScaleCheck
- * [neardup|gapmon|extract|bpeserve|curation ...]`
- * (no args = all). Prints `STREAMSCALE` lines; the SUMMARY line
+ * Usage: `runMain graft.StreamScaleCheck [mode ...]`, modes from
+ * [[Modes]] (no args = [[DefaultModes]]; an unknown name fails before
+ * any probe runs). Prints `STREAMSCALE` lines; the SUMMARY line
  * per (component, rate) carries the plateau and flatness verdicts
  * recorded in SURVEY §10.
  */
 object StreamScaleCheck {
+
+  /** The probes a plain run executes. */
+  val DefaultModes: Seq[String] = Seq("neardup", "gapmon", "extract",
+    "bpeserve", "curation", "urlseen", "linededup", "pacer")
+
+  /** Every probe name; the restart soak runs only when named. */
+  val Modes: Seq[String] = DefaultModes :+ "curation_restart"
+
+  /** The probes `args` names: [[DefaultModes]] when empty. */
+  def selectModes(args: Seq[String]): Set[String] = {
+    val unknown = args.filterNot(Modes.contains)
+    require(unknown.isEmpty, s"unknown mode(s) ${unknown.mkString(", ")}; " +
+      s"valid modes: ${Modes.mkString(", ")}")
+    if (args.isEmpty) DefaultModes.toSet else args.toSet
+  }
 
   /** Per-batch measurements out of `recentProgress` (data batches only). */
   private def progressLines(q: StreamingQuery): Seq[(Long, Long, Long)] = {
@@ -464,27 +482,26 @@ object StreamScaleCheck {
   /** Rate-scaled file extraction: the events table replicated `mult`×
     * (id-offset, the ScaleCheck discipline) as 16 immutable parquet
     * segments, streamed through the footer-stat offset ledger and the
-    * pipe projection with `maxEventsPerTrigger = mult × 2000` — so
-    * BOTH rates run the same ~50 micro-batches while each batch admits
-    * rate-proportional rows — each trigger split into 8 sub-range
-    * partitions. Per-batch latency must be flat in batch index and ≲
-    * linear in the admitted rows. */
+    * extractor itself (commit-ts enrichment + pipe chunks) with
+    * `maxEventsPerTrigger = mult × 2000` — so BOTH rates run the same
+    * ~50 micro-batches while each batch admits rate-proportional rows —
+    * each trigger split into 8 sub-range partitions. Per-batch latency
+    * must be flat in batch index and ≲ linear in the admitted rows. */
   private def runExtract(spark: SparkSession, mult: Int,
                          segDir: String): Unit = {
-    val q = ExtractionPipeline.pipeFormat(
-        spark.readStream.format(FileChangeLogStream.FormatName)
-          .option("path", segDir)
-          .option("maxEventsPerTrigger", mult * 2000L)
-          .option("numPartitions", 8)
-          .load())
-      .writeStream.format("noop")
-      .option("checkpointLocation",
-        Files.createTempDirectory("ssc-ex-ck").toString)
-      .start()
+    val work = Files.createTempDirectory("ssc-ex").toString
+    val q = ExtractionPipeline.start(
+      ExtractionPipeline.readChangeLog(spark, segDir, numPartitions = 8,
+        maxEventsPerTrigger = mult * 2000L),
+      s"$work/out", s"$work/ck", triggerMs = 0L)
     try {
       q.processAllAvailable()
       report("extract", mult, progressLines(q))
-    } finally q.stop()
+    } finally {
+      q.stop()
+      val fs = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+      Seq(work, segDir).foreach(d => fs.delete(new Path(d), true))
+    }
   }
 
   /** Rate-scaled [[graft.streaming.StreamingLineDedup]]: `mult × 500`
@@ -610,12 +627,9 @@ object StreamScaleCheck {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val want = selectModes(args.toSeq)
     val spark = GraftSession.local()
     spark.conf.set("spark.sql.streaming.metricsEnabled", "true")
-    val want: Set[String] =
-      if (args.isEmpty) Set("neardup", "gapmon", "extract", "bpeserve",
-        "curation", "urlseen", "linededup", "pacer")
-      else args.toSet
 
     // the serving model trains ONCE (the train/serve boundary the
     // operator documents); 2000 distinct words sustain 1000 merges
@@ -634,16 +648,18 @@ object StreamScaleCheck {
     // min/max of event_id is the source's offset metadata
     def segDirFor(mult: Int): String = {
       val dir = Files.createTempDirectory(s"ssc-segments-$mult").toString
-      val ev0 = graft.sources.ChangeLogSource.changeLog(spark, sfDir)
+      // cached once, so each landing replicates from memory
+      val ev0 = graft.sources.ChangeLogSource.changeLog(spark, sfDir).cache()
       val n = ev0.agg(max(col("event_id"))).head().getLong(0) + 1L
       val ev = ev0.crossJoin(
           spark.range(mult).select(col("id").as("__c")))
         .withColumn("event_id", col("event_id") + col("__c") * n)
         .drop("__c")
-      spark.conf.set("spark.sql.parquet.outputTimestampType",
-        "TIMESTAMP_MICROS")
-      ev.repartitionByRange(16, col("event_id"))
-        .write.mode("overwrite").parquet(dir)
+      splitRange(OffsetRange(-1L, n * mult - 1L), 16).foreach { r =>
+        FileChangeLogStream.writeSegment(
+          ev.filter(col("event_id") > r.min && col("event_id") <= r.max), dir)
+      }
+      ev0.unpersist()
       println(s"STREAMSCALE segments=16 mult=$mult dir=$dir")
       dir
     }

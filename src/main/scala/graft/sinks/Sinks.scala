@@ -52,13 +52,6 @@ object Sinks {
       .write.mode(mode).parquet(path)
   }
 
-  /** S5 (generic): `|`-separated CSV of all columns, headerless —
-    * byte-compatible with the chunk format for flat schemas. */
-  def writePipeCsv(df: DataFrame, path: String,
-                   mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode).option("sep", "|").option("header", "false")
-      .option("nullValue", "null").csv(path)
-
   /** The real analytical sink: partitioned parquet (what a 100 TB
     * pipeline lands; the pipe format is for reference fidelity). */
   def writeParquet(df: DataFrame, path: String,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.CdcOps
+import graft.sinks.Sinks
 import graft.util.Cols
 
 /**
@@ -38,14 +39,6 @@ object ExtractionPipeline {
       .load()
   }
 
-  /** The streamed rows rendered in `chunk` pipe format (S5 fidelity):
-    * keyed by offset, timestamps as epoch micros, money via DECIMAL. */
-  def pipeFormat(stream: DataFrame): DataFrame =
-    stream.select(col("event_id"),
-      CdcOps.pipeLine(Seq(col("event_id"), Cols.epochUs(col("ts")),
-        col("user_id"), col("event_type"),
-        col("value").cast("decimal(18,2)"), col("props"))).as("line"))
-
   /**
    * Start the extraction: every micro-batch is enriched with the
    * transaction commit timestamp (distinct txids → broadcast join —
@@ -55,10 +48,10 @@ object ExtractionPipeline {
    * transactional file sink.
    */
   def start(stream: DataFrame, outDir: String, checkpointDir: String,
-            triggerMs: Long = 1000L,
-            watermarkDelay: String = "10 seconds"): StreamingQuery =
+            triggerMs: Long = 1000L): StreamingQuery =
     stream
-      .withWatermark("ts", watermarkDelay)
+      // only so progress reports eventTime.max, which StalenessListener reads
+      .withWatermark("ts", "10 seconds")
       .writeStream
       .trigger(Trigger.ProcessingTime(triggerMs))
       .option("checkpointLocation", checkpointDir)
@@ -79,63 +72,10 @@ object ExtractionPipeline {
    * `CoordinatorRunnable.java:35-42`). [[ExactlyOnceSinkSpec]] kills a
    * batch after a partial write and proves the law.
    */
-  def writeBatch(batch: DataFrame, batchId: Long, outDir: String): Unit = {
-    val dim = CdcOps.commitTsDim(batch)
-    val enriched = CdcOps.enrichCommitTs(batch, dim)
-    enriched.select(
-        CdcOps.pipeLine(Seq(col("event_id"), Cols.epochUs(col("ts")),
-          col("user_id"), col("event_type"),
-          col("value").cast("decimal(18,2)"), col("props"),
-          Cols.epochUs(col("commit_ts")))).as("line"))
-      .write.mode("overwrite").text(s"$outDir/batch=$batchId")
-    ()
-  }
-
-  /**
-   * Deduplicate redelivered change events by offset within the
-   * watermark window — upgrades an at-least-once upstream (e.g. a
-   * connector that replays on reconnect) to exactly-once downstream
-   * without unbounded state: `dropDuplicatesWithinWatermark` evicts
-   * seen-offset state once the event-time watermark passes.
-   */
-  def dedupRedeliveries(stream: DataFrame,
-                        watermarkDelay: String = "10 minutes"): DataFrame =
-    stream.withWatermark("ts", watermarkDelay)
-      .dropDuplicatesWithinWatermark("event_id")
-
-  /**
-   * Stream-stream interval join: correlate two change streams on a
-   * key within an event-time window (e.g. "purchase within 1 hour of
-   * a click by the same user"). Both sides carry watermarks so the
-   * join state is bounded — buffered rows are evicted once the
-   * watermark passes the interval.
-   */
-  def correlate(left: DataFrame, right: DataFrame,
-                keyCol: String = "user_id",
-                within: String = "1 hour",
-                watermarkDelay: String = "10 minutes"): DataFrame = {
-    val l = left.withWatermark("ts", watermarkDelay)
-      .select(col(keyCol).as("l_key"), col("ts").as("l_ts"),
-        col("event_id").as("l_event_id"), col("event_type").as("l_type"))
-    val r = right.withWatermark("ts", watermarkDelay)
-      .select(col(keyCol).as("r_key"), col("ts").as("r_ts"),
-        col("event_id").as("r_event_id"), col("event_type").as("r_type"))
-    l.join(r,
-      col("l_key") === col("r_key") &&
-        col("r_ts") >= col("l_ts") &&
-        col("r_ts") <= col("l_ts") + expr(s"INTERVAL $within"))
-  }
-
-  /** Streaming per-minute throughput aggregation (T6) with watermarked
-    * state eviction — the windowed counters of `WorkerRunnable
-    * .java:158-179` without the unbounded maps. */
-  def throughputQuery(stream: DataFrame, outputMode: String = "update")
-      : DataFrame =
-    stream
-      .withWatermark("ts", "1 minute")
-      .groupBy(window(col("ts"), "1 minute"))
-      .agg(count(lit(1)).as("n_events"),
-        approx_count_distinct(col("user_id")).as("n_txids"))
-      .select(col("window.start").as("minute"), col("n_events"),
-        col("n_txids"))
+  def writeBatch(batch: DataFrame, batchId: Long, outDir: String): Unit =
+    Sinks.writePipeChunks(CdcOps.enrichCommitTs(batch, CdcOps.commitTsDim(batch)),
+      Seq(col("event_id"), Cols.epochUs(col("ts")), col("user_id"),
+        col("event_type"), col("value").cast("decimal(18,2)"), col("props"),
+        Cols.epochUs(col("commit_ts"))),
+      s"$outDir/batch=$batchId")
 }

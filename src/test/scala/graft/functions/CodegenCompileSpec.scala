@@ -52,4 +52,20 @@ class CodegenCompileSpec extends SparkSpec {
     ).collect()
     assert(out.length == 2)
   }
+
+  test("custom functions are SQL-registered via GraftExtensions") {
+    import spark.implicits._
+    val sim = spark.sql(
+      "SELECT simhash64(array('a', 'b')) AS s").as[Long].head()
+    val sim2 = spark.sql(
+      "SELECT simhash64(array('a', 'b')) AS s").as[Long].head()
+    assert(sim == sim2 && sim != 0L)
+    val mh = spark.sql(
+      "SELECT minhash_signature(array('x'), 4) AS m").as[Seq[Long]].head()
+    assert(mh.size == 4)
+    val fp = spark.sql(
+      "SELECT rolling_fingerprints('hello world rolling', 8, 2) AS f")
+      .as[Seq[Long]].head()
+    assert(fp.forall(_ % 2 == 0))
+  }
 }

@@ -21,14 +21,6 @@ class SinksSpec extends SparkSpec {
     assert(parts == 2) // one chunk file per partition, like chunk<i>
   }
 
-  test("writePipeCsv renders null as literal null") {
-    val dir = Files.createTempDirectory("sink").toString + "/csv"
-    Sinks.writePipeCsv(
-      Seq((1L, Option.empty[String])).toDF("id", "s"), dir)
-    val lines = spark.read.text(dir).as[String].collect()
-    assert(lines.toSeq == Seq("1|null"))
-  }
-
   test("writeParquet partitions by column") {
     val dir = Files.createTempDirectory("sink").toString + "/pq"
     Sinks.writeParquet(

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -121,74 +121,25 @@ class ChangeLogStreamSpec extends SparkSpec {
     assert(cols(6) == (1700000000000000L + 2000000L).toString)
   }
 
-  test("dedupRedeliveries drops replayed offsets within the watermark") {
-    val input = MemoryStream[ChangeLogSegments.Row](spark)
-    val deduped = ExtractionPipeline.dedupRedeliveries(
-      input.toDS().toDF(
-        "event_id", "tsMicros", "user_id", "event_type", "value", "props")
-        .withColumn("ts", expr("timestamp_micros(tsMicros)")).drop("tsMicros"))
-    val q = deduped.writeStream.format("memory").queryName("dedup_sink")
-      .outputMode("append").option("checkpointLocation", tmp()).start()
-    try {
-      val t0 = 1700000000000000L
-      input.addData(
-        (1L, t0, 1L, "click", 1.0, "p"),
-        (2L, t0 + 1000000, 1L, "view", 1.0, "p"),
-        (1L, t0, 1L, "click", 1.0, "p")) // redelivery, same batch
-      q.processAllAvailable()
-      // redelivery across batches, still inside the watermark window
-      input.addData((2L, t0 + 1000000, 1L, "view", 1.0, "p"),
-        (3L, t0 + 2000000, 1L, "click", 1.0, "p"))
-      q.processAllAvailable()
-      val ids = spark.table("dedup_sink").select("event_id")
-        .as[Long].collect()
-      assert(ids.sorted.toSeq == Seq(1L, 2L, 3L))
-    } finally q.stop()
-  }
-
-  test("stream-stream interval join correlates events within the window") {
-    val name = freshName()
-    val t0 = 1700000000000000L
-    val log = logOf(Seq(
-      (1L, t0, 7L, "click", 1.0, "p"),
-      (2L, t0 + 600L * 1000000, 7L, "purchase", 9.0, "p"),   // +10 min
-      (3L, t0 + 7200L * 1000000, 7L, "purchase", 9.0, "p"),  // +2 h: outside
-      (4L, t0 + 300L * 1000000, 8L, "purchase", 9.0, "p")))  // other user
-    val src = ExtractionPipeline.readChangeLog(spark, log)
-    val joined = ExtractionPipeline.correlate(
-      src.filter($"event_type" === "click"),
-      src.filter($"event_type" === "purchase"))
-    val q = joined.writeStream.format("memory").queryName(s"m$name")
-      .option("checkpointLocation", tmp()).start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table(s"m$name")
-        .select("l_event_id", "r_event_id").as[(Long, Long)].collect()
-      assert(got.toSeq == Seq((1L, 2L))) // only the within-window same-user pair
-    } finally q.stop()
-  }
-
-  test("streaming throughput query aggregates per-minute with watermark") {
-    val name = freshName()
-    val base = 1700000040000L // minute-aligned epoch millis
-    val log = logOf(Seq(
-      (1L, base * 1000L, 1L, "click", 1.0, "p"),
-      (2L, (base + 10000) * 1000L, 2L, "view", 1.0, "p"),
-      (3L, (base + 70000) * 1000L, 1L, "click", 1.0, "p"),
-      (4L, (base + 200000) * 1000L, 3L, "view", 1.0, "p")))
-    val q = ExtractionPipeline
-      .throughputQuery(ExtractionPipeline.readChangeLog(spark, log))
-      .writeStream.format("memory").queryName(s"m$name")
-      .outputMode("update").option("checkpointLocation", tmp()).start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table(s"m$name")
-        .select($"minute", $"n_events").as[(java.sql.Timestamp, Long)]
-        .collect().map { case (m, n) => m.getTime -> n }.toMap
-      assert(got(base) == 2L)          // minute 0: events 1, 2
-      assert(got(base + 60000) == 1L)  // minute 1: event 3
-      assert(got(base + 180000) == 1L) // minute 3: event 4
-    } finally q.stop()
+  test("a one-trigger extraction equals the batch pipe and commit-ts lines") {
+    // sf0.001 events as one segment: one trigger, so the batch-local
+    // commit ts is the global one the oracle-gated batch path computes
+    val sf = "/root/testdata/sf0.001"
+    val log = tmp()
+    Files.copy(Paths.get(sf, "events.parquet"), Paths.get(log, "seg-0.parquet"))
+    val out = tmp()
+    val q = ExtractionPipeline.start(ExtractionPipeline.readChangeLog(spark, log),
+      out, tmp(), triggerMs = 100L)
+    try q.processAllAvailable() finally q.stop()
+    assert(new java.io.File(out).list().count(_.startsWith("batch=")) == 1)
+    val got = spark.read.text(out).select("value").as[String].collect()
+    val exp = graft.SparkEntry.queries("cdc_pipe_format")(spark, sf)
+      .join(graft.SparkEntry.queries("cdc_commit_enrich")(spark, sf), "event_id")
+      .select($"event_id", concat_ws("|", $"line", $"commit_ts_us"))
+      .as[(Long, String)].collect().toMap
+    assert(exp.size == 1000)
+    assert(got.length == exp.size, "lost or duplicated lines")
+    assert(got.map(l => l.takeWhile(_ != '|').toLong -> l).toMap == exp)
   }
 
   test("staleness listener derives now - eventTime.max with running avg") {
@@ -216,5 +167,21 @@ class ChangeLogStreamSpec extends SparkSpec {
     assert(s.nonEmpty, "no staleness sample recorded")
     assert(s.head.stalenessMs.get == 100000L)
     assert(s.head.avgStalenessMs.get == 100000.0)
+  }
+
+  test("staleness average is time-weighted between progress events") {
+    // 100 ms at t = 0, 1000, 3000: the intervals average 600 and 1100 ms
+    var now = 0L
+    val listener = new StalenessListener(() => now)
+    val avgs = Seq(0L, 1000L, 3000L).map { t =>
+      now = 1700000000000L + t
+      listener.observe(t, Some(now - 100L), 1L, 10L).avgStalenessMs.get
+    }
+    assert(avgs.take(2) == Seq(100.0, 600.0))
+    assert(math.abs(avgs(2) - 2800000.0 / 3000) < 1e-9) // 933.3
+    // a report without event time leaves the average alone
+    now += 500L
+    assert(listener.observe(9L, None, 0L, 10L).avgStalenessMs == Some(avgs(2)))
+    assert(listener.samples.flatMap(_.stalenessMs) == Seq(100L, 100L, 100L))
   }
 }
